@@ -23,7 +23,7 @@ import time
 # local inputs (measured 1.5-2x wall on the cheap headline keys), while
 # everything it buys — runtime coalescing, skew splitting — needs real
 # data volume to matter. Cluster deployments and all correctness paths
-# keep the AQE-on default (jsmr_spark/session.py RUNTIME_CONFS).
+# keep the AQE-on default (jsmr_spark/session.py CONFS).
 os.environ.setdefault("SPARK_GRAFT_AQE", "false")
 
 HEADLINE = [

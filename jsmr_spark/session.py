@@ -1,12 +1,23 @@
-"""SparkSession factory with the configs this engine requires.
+"""SparkSession factory and the one table of confs this engine sets.
 
-Two usage modes:
-  * Tests / bench / standalone: ``get_spark()`` builds a local session.
-  * Driver mode: the driver owns the session and passes it to
-    ``entry(spark)`` / ``queries()[k](spark, sf_dir)``; we cannot rebuild
-    it, so ``ensure_engine_confs(spark)`` applies the runtime-settable
-    subset (all engine-required confs are SQLConf entries, hence
-    session-settable).
+Every conf the engine sets appears once in ``CONFS``, with one scope:
+
+  * ``static`` — builder only (``get_spark``). Fixed for the session's
+    life; a driver-owned session keeps whatever its builder chose.
+  * ``runtime`` — applied by ``ensure_engine_confs`` to every session,
+    including one the driver owns and passes to ``entry(spark)`` /
+    ``queries()[k](spark, sf_dir)``. All are SQLConf entries, hence
+    session-settable.
+  * ``local`` — as ``runtime``, but only when the master is
+    ``local[*]``; real clusters keep their own sizing.
+
+Runtime confs are applied once per session and never by the builder,
+so a second ``get_spark()`` cannot re-apply stale values, and a
+caller's later override sticks. A runtime conf that does not apply is
+reported with a warning naming the key, not swallowed.
+
+Temporary conf changes go through ``scoped_conf``, which puts the
+session back exactly as it found it, unset keys included.
 
 Required confs and why (SURVEY.md §7.1):
   * ``spark.sql.legacy.parquet.nanosAsLong=true`` — the ``events``
@@ -21,11 +32,17 @@ Required confs and why (SURVEY.md §7.1):
 
 from __future__ import annotations
 
+import contextlib
 import os
+import warnings
+import weakref
+from typing import Callable, Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
-import weakref
+
+def default_parallelism() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
 def _aqe_default() -> str:
@@ -38,85 +55,59 @@ def _aqe_default() -> str:
     return os.environ.get("SPARK_GRAFT_AQE", "true")
 
 
-# Confs that are safe (and required) to set on a live session.
-# A function, not a module constant: the AQE entries read the env at
-# call time so a harness can flip SPARK_GRAFT_AQE after import.
-def RUNTIME_CONFS() -> dict[str, str]:
-    return {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": _aqe_default(),
-        "spark.sql.adaptive.coalescePartitions.enabled": _aqe_default(),
-        "spark.sql.adaptive.skewJoin.enabled": _aqe_default(),
-        # r12 (guide §4 — the Python boundary): PySpark 4 wraps every
-        # DataFrame/Column API call with a call-site capture for error
-        # context (a Python stack walk + 2 extra py4j round trips + a
-        # conf read PER CALL). Measured on this box: F.col alone drops
-        # 7.3 -> 2.2 ms with it off. Pure client-side debug metadata —
-        # no effect on plans or results.
-        "spark.python.sql.dataFrameDebugging.enabled": "false",
-    }
-
-# Applied alongside RUNTIME_CONFS when the session is driver-owned: a
-# vanilla session defaults to 200 shuffle partitions, which at bench
-# scale is pure task-scheduling overhead (on a real cluster this is
-# instead sized to ~2-3x total executor cores). Capped at 16 locally:
-# at fixture sizes the per-task scheduling cost dominates past ~16
-# tasks per exchange (measured: the 4 shuffle-heavy headline keys run
-# 12% faster at 16 than at 32; 8 is flat vs 16), while AQE coalescing
-# keeps the reduce side right-sized either way.
-_ADAPTIVE_CONFS = {
-    "spark.sql.shuffle.partitions": lambda: str(min(default_parallelism(), 16)),
-}
-
-# Local-mode-only sizing, env-overridable. r13 correction: every
-# fixture parquet file is ONE row group (verified with pyarrow), and
-# Spark's parquet reader is row-group granular — a task whose byte
-# range contains the row-group start decodes the whole group, so
-# sub-file splits can never parallelize these scans; the old 8m
-# default only manufactured empty tasks (lineitem sf0.1: 11 tasks, 10
-# of them no-ops) and their scheduling overhead. 128m (= the engine
-# default) removes them: bench A/B interleaved, exec total 0.98/0.98
-# -> 0.90/0.87 s. Only applied when the master is local[*]; real
-# clusters keep their own sizing.
-_LOCAL_SCAN_CONFS = {
-    "spark.sql.files.maxPartitionBytes": lambda: os.environ.get("SPARK_GRAFT_SPLIT", "128m"),
-    "spark.sql.files.openCostInBytes": lambda: "1m",
+# conf -> (scope, value). A callable value is read when the conf is
+# applied, so a harness can flip SPARK_GRAFT_* after import.
+CONFS: dict[str, tuple[str, str | Callable[[], str]]] = {
+    "spark.master": ("static", lambda: f"local[{default_parallelism()}]"),
+    "spark.driver.memory": ("static", lambda: os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")),
+    "spark.ui.enabled": ("static", "false"),
+    "spark.sql.execution.arrow.pyspark.enabled": ("static", "true"),
+    # r12 (guide §4 — the Python boundary): PySpark 4 wraps every
+    # DataFrame/Column API call with a call-site capture for error
+    # context (a Python stack walk + 2 extra py4j round trips + a
+    # conf read PER CALL). Measured on this box: F.col alone drops
+    # 7.3 -> 2.2 ms with it off. Pure client-side debug metadata —
+    # no effect on plans or results. A STATIC conf: driver-owned
+    # sessions get the same effect from the client pin in
+    # ensure_engine_confs.
+    "spark.python.sql.dataFrameDebugging.enabled": ("static", "false"),
+    "spark.sql.legacy.parquet.nanosAsLong": ("runtime", "true"),
+    "spark.sql.session.timeZone": ("runtime", "UTC"),
+    "spark.sql.adaptive.enabled": ("runtime", _aqe_default),
+    "spark.sql.adaptive.coalescePartitions.enabled": ("runtime", _aqe_default),
+    "spark.sql.adaptive.skewJoin.enabled": ("runtime", _aqe_default),
+    # A vanilla session defaults to 200 shuffle partitions, which at
+    # bench scale is pure task-scheduling overhead (on a real cluster
+    # this is instead sized to ~2-3x total executor cores). Capped at
+    # 16 locally: at fixture sizes the per-task scheduling cost
+    # dominates past ~16 tasks per exchange (measured: the 4
+    # shuffle-heavy headline keys run 12% faster at 16 than at 32; 8
+    # is flat vs 16), while AQE coalescing keeps the reduce side
+    # right-sized either way.
+    "spark.sql.shuffle.partitions": ("runtime", lambda: str(min(default_parallelism(), 16))),
+    # r13 correction: every fixture parquet file is ONE row group
+    # (verified with pyarrow), and Spark's parquet reader is row-group
+    # granular — a task whose byte range contains the row-group start
+    # decodes the whole group, so sub-file splits can never parallelize
+    # these scans; the old 8m default only manufactured empty tasks
+    # (lineitem sf0.1: 11 tasks, 10 of them no-ops) and their
+    # scheduling overhead. 128m (= the engine default) removes them:
+    # bench A/B interleaved, exec total 0.98/0.98 -> 0.90/0.87 s.
+    "spark.sql.files.maxPartitionBytes": ("local", "128m"),
+    "spark.sql.files.openCostInBytes": ("local", "1m"),
 }
 
 
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+def _confs(*scopes: str) -> dict[str, str]:
+    return {k: v() if callable(v) else v for k, (s, v) in CONFS.items() if s in scopes}
 
 
-def get_spark(app_name: str = "jsmr_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or fetch) a local SparkSession sized to this machine.
-
-    ``shuffle_partitions`` defaults to the core count: at local/bench
-    scale more partitions only add scheduling overhead; on a real
-    cluster this is tuned to ~2-3× total cores (SURVEY.md §7.4).
-    """
-    cpus = default_parallelism()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # r13: fixture files are single-row-group parquet, so sub-file
-        # splits cannot parallelize the scan (row-group granularity) —
-        # they only add empty tasks. See _LOCAL_SCAN_CONFS.
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_SPLIT", "128m"))
-        .config("spark.sql.files.openCostInBytes", "1m")
-    )
-    for k, v in RUNTIME_CONFS().items():
+def get_spark(app_name: str = "jsmr_spark") -> SparkSession:
+    """Build (or fetch) a local SparkSession sized to this machine."""
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in _confs("static").items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    ensure_engine_confs(spark)
-    return spark
+    return ensure_engine_confs(builder.getOrCreate())
 
 
 # Sessions ensure_engine_confs has already configured. Memoized so (a)
@@ -128,27 +119,31 @@ _CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
-    """Apply engine-required runtime confs to an externally-owned session.
+    """Apply the ``runtime`` (and, on a local master, ``local``) confs.
 
     Idempotent and applied once per session; later explicit conf
-    overrides by the caller stick."""
+    overrides by the caller stick. Keys that fail to apply (immutable
+    in this deployment) are named in one warning; reads must cope
+    (io.py checks the session timezone before relying on it)."""
     if spark in _CONFIGURED:
         return spark
     _CONFIGURED.add(spark)
-    for k, v in RUNTIME_CONFS().items():
+    scopes = ["runtime"]
+    if spark.conf.get("spark.master", "").startswith("local"):
+        scopes.append("local")
+    failed = []
+    for k, v in _confs(*scopes).items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Immutable in this deployment; reads must cope (io.py has a
-            # fallback path for events if nanosAsLong can't be set).
-            pass
+        except Exception as e:  # noqa: BLE001 - reported below
+            failed.append(f"{k} ({type(e).__name__})")
+    if failed:
+        warnings.warn(f"engine confs did not apply: {', '.join(failed)}", RuntimeWarning, stacklevel=2)
     # r13 correction: spark.python.sql.dataFrameDebugging.enabled is a
-    # STATIC conf — on a driver-owned session the conf.set above throws
-    # CANNOT_MODIFY_STATIC_CONFIG (swallowed) and the builder-time
-    # default (true) stands, so r12's cache drop made pyspark re-read
-    # "true" and the per-call capture stayed ON for vanilla sessions
-    # (measured: ~5 ms of Python stack walk + extra py4j round trips
-    # per DataFrame/Column call). The flag is client-side-only error-
+    # STATIC conf, so on a driver-owned session the builder-time default
+    # (true) stands and pyspark's per-call capture stays ON (measured:
+    # ~5 ms of Python stack walk + extra py4j round trips per
+    # DataFrame/Column call). The flag is client-side-only error-
     # context capture with zero effect on plans or results, so apply
     # the intent at the client: pin pyspark's cached check to the
     # session's effective conf — False unless the caller explicitly
@@ -164,19 +159,22 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
         )
     except Exception:
         pass
-    for k, fv in _ADAPTIVE_CONFS.items():
-        try:
-            spark.conf.set(k, fv())
-        except Exception:
-            pass
-    try:
-        is_local = spark.sparkContext.master.startswith("local")
-    except Exception:
-        is_local = False
-    if is_local:
-        for k, fv in _LOCAL_SCAN_CONFS.items():
-            try:
-                spark.conf.set(k, fv())
-            except Exception:
-                pass
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body, then put back exactly what was there:
+    keys that were unset are unset again, the rest get their old value,
+    also when the body raises."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -22,6 +22,7 @@ length.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
+from jsmr_spark.session import scoped_conf
 
 
 def _replay_tmp_root() -> str:
@@ -95,12 +97,8 @@ def _stage_chunks(spark: SparkSession, sf_dir: str, n_chunks: int, late_tail: bo
     # TIMESTAMP_MICROS so the pyarrow round trip is exact: the INT96
     # default reads back as ns and would re-write as TIMESTAMP(NANOS),
     # which the nanosAsLong session conf then scans as bigint.
-    old_tt = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}):
         ev.coalesce(1).write.parquet(stage)
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", old_tt)
     part = _glob.glob(os.path.join(stage, "part-*.parquet"))
     if len(part) != 1:
         # coalesce(1) guarantees a single part file; anything else would
@@ -127,7 +125,8 @@ def _stage_chunks(spark: SparkSession, sf_dir: str, n_chunks: int, late_tail: bo
     return base, src_dir, n_rows
 
 
-class _replay_shuffle_clamp:
+@contextlib.contextmanager
+def _replay_shuffle_clamp(spark: SparkSession, n_rows: int | None = None):
     """Clamp spark.sql.shuffle.partitions for the duration of a replay.
 
     AQE never applies to streaming queries, so every stateful operator
@@ -146,41 +145,27 @@ class _replay_shuffle_clamp:
     PER MICRO-BATCH, so the floor is pure per-batch commit overhead at
     fixture scale, while the probe scales — 1M rows still sizes to 32,
     the r6 input-aware fix unchanged) — exactly the once-per-stream
-    sizing a real deployment does."""
+    sizing a real deployment does.
 
-    def __init__(self, spark: SparkSession, n_rows: int | None = None):
-        self.spark = spark
-        self.n = "4" if n_rows is None else str(min(32, max(4, n_rows // 20_000)))
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
-        # Ephemeral checkpoint root for the replay's queries (r13): a
-        # memory-sink query otherwise checkpoints to a temp dir under
-        # java.io.tmpdir, which on a disk-backed /tmp pays the state
-        # store's per-partition-per-store fsync chain every micro-batch
-        # (see _replay_tmp_root). Runners that pass an explicit
-        # checkpointLocation option (restart/CDC — their checkpoints
-        # must live with the staged chunks) override this conf, which
-        # is exactly Spark's precedence. Deleted on exit; queries
-        # started inside the clamp are stopped inside it.
-        self.ckpt = os.path.join(
-            _replay_tmp_root(), f"jsmr_ckpt_{uuid.uuid4().hex[:8]}"
-        )
-        self.old_ckpt = self.spark.conf.get(
-            "spark.sql.streaming.checkpointLocation", None
-        )
-        self.spark.conf.set("spark.sql.streaming.checkpointLocation", self.ckpt)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        if self.old_ckpt is None:
-            self.spark.conf.unset("spark.sql.streaming.checkpointLocation")
-        else:
-            self.spark.conf.set(
-                "spark.sql.streaming.checkpointLocation", self.old_ckpt
-            )
-        shutil.rmtree(self.ckpt, ignore_errors=True)
+    Also sets an ephemeral checkpoint root for the replay's queries
+    (r13): a memory-sink query otherwise checkpoints to a temp dir
+    under java.io.tmpdir, which on a disk-backed /tmp pays the state
+    store's per-partition-per-store fsync chain every micro-batch (see
+    _replay_tmp_root). Runners that pass an explicit checkpointLocation
+    option (restart/CDC — their checkpoints must live with the staged
+    chunks) override this conf, which is exactly Spark's precedence.
+    Deleted on exit; queries started inside the clamp are stopped
+    inside it."""
+    n = "4" if n_rows is None else str(min(32, max(4, n_rows // 20_000)))
+    ckpt = os.path.join(_replay_tmp_root(), f"jsmr_ckpt_{uuid.uuid4().hex[:8]}")
+    try:
+        with scoped_conf(spark, {
+            "spark.sql.shuffle.partitions": n,
+            "spark.sql.streaming.checkpointLocation": ckpt,
+        }):
+            yield
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _run_stream(spark: SparkSession, src_dir: str, transform, query_name: str, n_rows: int | None = None) -> DataFrame:

@@ -9,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.mr import job
+from jsmr_spark.session import scoped_conf
 
 
 def test_agg_over_empty_input(spark):
@@ -153,19 +154,17 @@ def test_events_loader_requires_utc_for_ntz(spark, tmp_path):
     ).write.parquet(f"{sf_dir}/events.parquet")
     import jsmr_spark.io as jio
 
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
     old_fn = jio.ensure_engine_confs
     try:
         # Emulate a driver-owned session whose timezone conf is pinned:
-        # ensure_engine_confs cannot fix it (it swallows failures there),
-        # so the loader must detect the non-UTC zone and refuse.
+        # ensure_engine_confs cannot fix it (it only warns there), so
+        # the loader must detect the non-UTC zone and refuse.
         jio.ensure_engine_confs = lambda s: s
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        with pytest.raises(RuntimeError, match="UTC session"):
-            load_table(spark, sf_dir, "events")
+        with scoped_conf(spark, {"spark.sql.session.timeZone": "America/New_York"}):
+            with pytest.raises(RuntimeError, match="UTC session"):
+                load_table(spark, sf_dir, "events")
     finally:
         jio.ensure_engine_confs = old_fn
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
 def test_not_in_with_null_in_subquery_is_empty(spark):
@@ -347,7 +346,6 @@ def test_dynamic_overwrite_premise_static_would_clobber(spark):
     from tests.conftest import SF_DIR
 
     out = os.path.join(tempfile.gettempdir(), f"jsmr_dynover_premise_{uuid.uuid4().hex[:8]}")
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         agg = (
             load_table(spark, SF_DIR, "events")
@@ -355,14 +353,13 @@ def test_dynamic_overwrite_premise_static_would_clobber(spark):
             .agg(F.count(F.lit(1)).alias("n"))
         )
         agg.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        agg.filter(F.col("event_type") == "click").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(out)
-        left = {r.event_type for r in spark.read.parquet(out).collect()}
-        assert left == {"click"}, left
+        with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "static"}):
+            agg.filter(F.col("event_type") == "click").write.mode("overwrite").partitionBy(
+                "event_type"
+            ).parquet(out)
+            left = {r.event_type for r in spark.read.parquet(out).collect()}
+            assert left == {"click"}, left
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
         shutil.rmtree(out, ignore_errors=True)
 
 
@@ -2136,3 +2133,41 @@ def test_bootstrap_all_zero_replicate_null_semantics(spark, tmp_path):
     # vc=350, so every non-null singleton replicate mean is exactly
     # 350*1000 milli regardless of the drawn weight
     assert by_type["solo"]["boot_mean_milli"] == 350 * 1000 * 23 // 32
+
+
+def test_block_cosine_keeps_pair_that_rounds_up_to_threshold(spark):
+    """A raw cosine in [0.39995, 0.399999) rounds to 0.4 and passes
+    round(sim, 4) >= 0.40 in the sequential kernel, so the block-GEMM
+    prefilter must not drop it: its margin has to cover round(,4)'s
+    half-step, not just BLAS summation slack."""
+    import math
+
+    from jsmr_spark.queries.similarity import PAIR_THRESHOLD, _dot, _norm
+    from jsmr_spark.vectorized import block_cosine_pairs
+
+    c = 0.39997
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [c, math.sqrt(1 - c * c)])],
+        "vec_id long, embedding array<float>",
+    )
+    x, y = emb.alias("x"), emb.alias("y")
+    xe, ye = F.col("x.embedding"), F.col("y.embedding")
+    raw = F.col("raw")
+    sequential = (
+        x.join(y, F.col("x.vec_id") < F.col("y.vec_id"))
+        .select(
+            F.col("x.vec_id").alias("vec_a"),
+            F.col("y.vec_id").alias("vec_b"),
+            (_dot(xe, ye) / (_norm(xe) * _norm(ye))).alias("raw"),
+        )
+        .select("vec_a", "vec_b", raw, F.round(raw, 4).alias("sim"))
+        .filter(F.col("sim") >= PAIR_THRESHOLD)
+        .collect()
+    )
+    # premise: the pair sits in the interval a 1e-6 margin used to drop
+    assert [(r.vec_a, r.vec_b, r.sim) for r in sequential] == [(0, 1, 0.4)]
+    assert 0.39995 <= sequential[0].raw < PAIR_THRESHOLD - 1e-6
+    blocked = block_cosine_pairs(emb, PAIR_THRESHOLD).collect()
+    assert sorted(tuple(r) for r in blocked) == [
+        (r.vec_a, r.vec_b, r.sim) for r in sequential
+    ]

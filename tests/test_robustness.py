@@ -184,3 +184,29 @@ def test_result_invariant_to_planner_config(spark, alt_spark, name):
     a_cols, a_rows = canon_rows(alt.columns, [tuple(r) for r in alt.collect()])
     assert b_cols == a_cols
     assert b_rows == a_rows, f"{name}: result depends on planner config"
+
+
+def test_engine_leaves_no_conf_trace(spark):
+    """Keys that change confs for their own writes put the session back
+    exactly as they found it: a caller's override survives, and keys
+    that were unset stay unset (``getAll`` lists only set keys). The
+    same holds for a ``scoped_conf`` body that raises."""
+    from jsmr_spark.session import scoped_conf
+
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "20m"}):
+        before = spark.conf.getAll
+        for name in ("sink_bucketed", "sink_dynamic_overwrite", "stream_dedup_within_wm"):
+            get_query(name).fn(spark, SF_DIR).collect()
+        with pytest.raises(ZeroDivisionError):
+            with scoped_conf(spark, {
+                "spark.sql.autoBroadcastJoinThreshold": "-1",
+                "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+            }):
+                1 / 0
+        after = spark.conf.getAll
+    changed = {
+        k: (before.get(k), after.get(k))
+        for k in before.keys() | after.keys()
+        if before.get(k) != after.get(k)
+    }
+    assert not changed, changed

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
 from jsmr_spark.registry import get_query
+from jsmr_spark.session import scoped_conf
 from jsmr_spark.streaming.core import (
     run_dedup_stream,
     run_tumbling_stream,
@@ -185,22 +186,14 @@ def test_tumbling_stream_on_rocksdb_state_store(spark):
     state store provider (the backend a 100 TB deployment runs, with
     state spilled off-heap and changelog checkpointing available) must
     emit exactly the same windows as the default HDFS-backed store."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    }):
         streamed = {
             (r.window_start, r.window_end, r.event_type): r.n
             for r in run_tumbling_stream(spark, SF_DIR).collect()
         }
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     batch = {
         (r.window_start, r.window_end, r.event_type): r.n
         for r in get_query("q_stream_tumbling").fn(spark, SF_DIR).collect()

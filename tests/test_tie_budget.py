@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
 from jsmr_spark.registry import get_query
+from jsmr_spark.session import scoped_conf
 
 from tests.conftest import SF01_DIR
 
@@ -85,11 +86,7 @@ def test_tie_keys_under_ansi_mode(spark):
     corrupting z / hc4. Default-mode results must be identical."""
     keys = ("q_stats_mannwhitney", "q_stats_kruskal")
     plain = {k: get_query(k).fn(spark, SF01_DIR).collect() for k in keys}
-    prev = spark.conf.get("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": "true"}):
         for k in keys:
             ansi_rows = get_query(k).fn(spark, SF01_DIR).collect()
             assert ansi_rows == plain[k], f"{k}: ANSI mode changed results"
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
