@@ -28,7 +28,7 @@ Round-13 rotation (selection rule in CHECKS_r13.md):
         parse, window-instead-of-join rewrites);
     (d) 4 keys with r12 plan-structure-only changes (node-identical
         parsed-expr trees, loop-job removal) + the r13 explicit
-        StorageLevel pin on their shared shingle cache;
+        storage-level pin on their shared shingle-set relation;
     (e) 5 oldest-signal slots continuing CHECKS_r12's rotation plan
         down the r5 alphabet (q_agg_minmax onward).
 """
@@ -82,7 +82,7 @@ _ALIASED = (
     "q_dedup_band_tune",
     "q_ml_mutual_info",
     "q_ml_learning_curve",
-    # ---- (d) r12 plan-structure changes + r13 StorageLevel pin (4) ----
+    # ---- (d) r12 plan-structure changes + r13 storage-level pin (4) ----
     "q_graph_concomp",
     "q_dedup_minhash",
     "q_merge_dedup",

@@ -27,27 +27,11 @@ plus an optional bucket-size cap handle it.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.queries.common import t
 from jsmr_spark.registry import query
-
-
-def _persist_sets(df: DataFrame) -> DataFrame:
-    """Intra-query branch sharing of a shingle-set relation (the band
-    self-join reads it via mh on both sides AND verification re-reads
-    it) — NOT cross-run result caching; the relation lives and dies
-    inside one query execution.
-
-    StorageLevel pinned explicitly (VERDICT r12 #5): MEMORY_AND_DISK —
-    identical to what `.cache()` defaults to, stated here because the
-    relation is corpus-sized at 100 TB, so the spill story must be
-    explicit: partitions that exceed executor storage memory spill to
-    local disk instead of OOMing or silently recomputing the shingle
-    scan per branch. It is never broadcast and never collected."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 P = 1_000_000_007
 N_HASHES = 16
@@ -165,6 +149,27 @@ def _minhash_set_cols():
     ]
 
 
+def _band_keys(sets: DataFrame) -> DataFrame:
+    """Shingle sets -> (doc_id, band, bkey): one posexplode emits all
+    N_BANDS band keys per doc in a single narrow pass over the minhash
+    signature."""
+    mh = sets.select("doc_id", *_minhash_set_cols())
+    return mh.select(
+        "doc_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.concat_ws(
+                        ",",
+                        *[F.col(f"m{band * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
+                    )
+                    for band in range(N_BANDS)
+                ]
+            )
+        ).alias("band", "bkey"),
+    )
+
+
 _ORACLE_MINHASH_COLS = ",\n           ".join(
     f"min(({a} * hv + {b}) % {P}) AS m{k}" for k, (a, b) in enumerate(SEEDS)
 )
@@ -230,32 +235,17 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange builds the per-doc shingle sets; signatures and band keys
     are narrow maps over it; the band self-join + candidate distinct
     shuffle only (doc_id, band-key) rows; verification joins the
-    candidate pairs back to the cached sets and intersects ARRAYS
+    candidate pairs back to the same sets and intersects ARRAYS
     per-pair (`array_intersect`) — no exploded-row shuffle at all.
     Candidate side is tiny relative to the corpus, so AQE turns those
     two joins into broadcasts at runtime."""
-    # Cached because bands reference it via mh on both sides of the
-    # self-join AND the verification joins re-read it: without the
-    # cache the shingle scan re-executes once per plan branch.
-    sets = _persist_sets(_shingle_sets(spark, sf_dir))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-
-    # One posexplode emits all 4 band keys per doc in a single pass over
-    # mh (the 4-way union form evaluated mh once per branch).
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[F.col(f"m{band * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
+    # Bands read `sets` via mh on both sides of the self-join and the
+    # verification joins re-read it; every branch plans the same
+    # shingle-set exchange, which Spark runs once and shares as a
+    # ReusedExchange — no cache (a persisted relation outlives the
+    # query in the CacheManager).
+    sets = _shingle_sets(spark, sf_dir)
+    bands = _band_keys(sets)
 
     b2 = bands.select(
         F.col("doc_id").alias("doc_b"), F.col("band").alias("band_b"), F.col("bkey").alias("bkey_b")
@@ -272,7 +262,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Exact verification per candidate pair: set intersection over the
-    # 48-bit hashes via array_intersect on the two cached hvs arrays —
+    # 48-bit hashes via array_intersect on the two hvs arrays —
     # identical counts to the oracle's exploded join-group (both are
     # exact distinct-set intersection; hv collisions ~2^-48 hit both
     # engines identically).
@@ -434,22 +424,8 @@ def q_merge_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch only, and the candidate join is batch-size x collision
     rate, independent of corpus row count. Verification joins fetch
     only the colliding docs' shingle sets."""
-    sets = _persist_sets(_shingle_sets(spark, sf_dir))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[F.col(f"m{band * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
+    sets = _shingle_sets(spark, sf_dir)
+    bands = _band_keys(sets)
     is_new = (F.col("doc_id") % NEW_BATCH_MOD) >= NEW_BATCH_RESIDUE
     new_b = bands.filter(is_new).select(
         F.col("doc_id").alias("new_id"), "band", "bkey"
@@ -640,25 +616,8 @@ def q_dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RECALL_SAMPLE_N)
         .select("doc_id")
     )
-    sets = _persist_sets(sets_all.join(F.broadcast(panel), "doc_id"))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"m{band * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
+    sets = sets_all.join(F.broadcast(panel), "doc_id")
+    bands = _band_keys(sets)
     b2 = bands.select(
         F.col("doc_id").alias("doc_b"),
         F.col("band").alias("band_b"),
@@ -938,7 +897,7 @@ def q_dedup_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RECALL_SAMPLE_N)
         .select("doc_id")
     )
-    sets = _persist_sets(sets_all.join(F.broadcast(panel), "doc_id"))
+    sets = sets_all.join(F.broadcast(panel), "doc_id")
     mh = sets.select("doc_id", *_minhash_set_cols())
 
     # r12 (guide §2.4): all three configs' band keys come from the SAME
@@ -1280,33 +1239,18 @@ def q_dedup_snapshot_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bk") < 95, F.concat(F.col("text"), F.lit(" u2"))
         ).otherwise(F.col("text")).alias("text"),
     )
-    # One shingle-set build over the whole snapshot (cached: the band
-    # join reads it via mh on both sides and verification re-reads it).
-    sets = _persist_sets(_shingle_sets_of(carried.unionByName(added)))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"m{band * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
-    new_b = bands.filter(F.col("doc_id") >= SNAP_DELTA_SHIFT).select(
+    # The snapshot's shingle sets, split by side: added doc_ids are
+    # shifted by SNAP_DELTA_SHIFT, so the two are disjoint. Each side's
+    # band keys and verification read one relation, whose exchange
+    # Spark runs once and shares as a ReusedExchange.
+    sets_n = _shingle_sets_of(added)
+    sets_o = _shingle_sets_of(carried)
+    new_b = _band_keys(sets_n).select(
         F.col("doc_id").alias("new_id"), "band", "bkey"
     )
     # The live snapshot's LSH band index: corpus-sized -> never
     # broadcast; keyed join, AQE decides the physical strategy.
-    old_b = bands.filter(F.col("doc_id") < SNAP_DELTA_SHIFT).select(
+    old_b = _band_keys(sets_o).select(
         F.col("doc_id").alias("old_id"),
         F.col("band").alias("band_o"),
         F.col("bkey").alias("bkey_o"),
@@ -1320,8 +1264,8 @@ def q_dedup_snapshot_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("new_id", "old_id")
         .distinct()
     )
-    sn = sets.select(F.col("doc_id").alias("new_id"), F.col("hvs").alias("hvs_n"))
-    so = sets.select(F.col("doc_id").alias("old_id"), F.col("hvs").alias("hvs_o"))
+    sn = sets_n.select(F.col("doc_id").alias("new_id"), F.col("hvs").alias("hvs_n"))
+    so = sets_o.select(F.col("doc_id").alias("old_id"), F.col("hvs").alias("hvs_o"))
     jac = F.col("n_common") / (F.col("n_new") + F.col("n_old") - F.col("n_common"))
     ver = (
         cand.join(sn, "new_id")

@@ -115,12 +115,12 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j in range(SIMHASH_BITS)
     ]
     sig = hv.groupBy("doc_id").agg(*bit_cols)
-    # Cached: the block self-join references the signature table on BOTH
-    # sides — uncached, the 32-bit-vote aggregation re-executes once per
-    # plan branch (the same 8x diamond minhash had). n_docs rows only.
+    # The block self-join references the signature table on both sides;
+    # both plan the same vote-aggregation exchange, which Spark runs once
+    # and shares as a ReusedExchange. n_docs rows only.
     total = sig.select(
         "doc_id", sum([F.col(f"b{j}") for j in range(SIMHASH_BITS)], F.lit(0).cast("long")).alias("simhash")
-    ).cache()
+    )
     # Pigeonhole blocking: equi-join candidates on one-of-4 byte blocks
     # (see oracle comment) — no nested-loop, shuffle keyed on (blk, bval).
     # One posexplode emits all 4 block keys per doc in a single pass.
@@ -213,8 +213,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per document; sizes are a narrow size(hvs) and the join branches
     # a narrow re-explode — the previous distinct-then-groupBy form
     # paid a full-width (doc,lang,source,hv) exchange plus a second
-    # sizes exchange for the same result. Cached: feeds both self-join
-    # sides plus sizes. Dedup and join run on the 48-bit bigram hash
+    # sizes exchange for the same result. It feeds both self-join sides
+    # plus sizes; Spark runs that exchange once and shares it as a
+    # ReusedExchange. Dedup and join run on the 48-bit bigram hash
     # (see _NGRAM_CTE comment).
     gr_sets = (
         docs.select(
@@ -238,7 +239,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "lang", "source")
         .agg(F.collect_set("hv").alias("hvs"))
-        .cache()
     )
     gr = gr_sets.select("doc_id", "lang", "source", F.explode("hvs").alias("hv"))
     sizes = gr_sets.select("doc_id", F.size("hvs").cast("long").alias("n"))

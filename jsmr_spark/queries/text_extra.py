@@ -290,7 +290,7 @@ def q_text_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eval suites are MBs against a 100 TB corpus), so its distinct
     shingle-hash set broadcasts; the corpus side is the same one-wide-
     exchange shingle-set diet every dedup key shares (jsmr_spark
-    dedup.py:_shingles — cached collect_set reused across this family),
+    dedup.py:_shingles — the collect_set builder this family shares),
     and the overlap count is a map-side-combined count per doc. No
     shuffle grows with corpus size except the shingle build itself."""
     from jsmr_spark.queries.dedup import _shingles

@@ -7,7 +7,7 @@ equivalent READ surface so an engine user has the same observability:
 
   * engine_status()    — cluster/app snapshot (executors, parallelism,
                          active jobs/stages) ~ JsMr admin endpoint;
-  * run_with_counter() — accumulator-instrumented execution ~ JsMr
+  * run_with_counter() — observation-instrumented execution ~ JsMr
                          per-job record counters (the MR counter idiom);
   * fault tolerance itself (A9) is Spark's task retry + speculation —
     nothing to reimplement, configured in session.py.
@@ -17,7 +17,8 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def engine_status(spark: SparkSession) -> dict[str, Any]:
@@ -37,19 +38,12 @@ def engine_status(spark: SparkSession) -> dict[str, Any]:
 
 
 def run_with_counter(df: DataFrame, counter_name: str = "records") -> tuple[list, int]:
-    """Collect `df` while counting the rows that flow through the final
-    stage with an accumulator — the MapReduce 'counter' idiom (A10).
+    """Collect `df` while counting its rows with a named observation —
+    the MapReduce 'counter' idiom (A10). The count rides the collect's
+    own task metrics (no second pass, no Python worker) and counts
+    committed rows only.
 
-    Returns (rows, counted). Note accumulators count task ATTEMPTS; with
-    retries/speculation the count can exceed the row count — which is
-    exactly the visibility JsMr's coordinator had into re-issued tasks.
-    """
-    sc = df.sparkSession.sparkContext
-    acc = sc.accumulator(0)
-
-    def count_row(row):
-        acc.add(1)
-        return row
-
-    rows = df.rdd.map(count_row).collect()
-    return rows, acc.value
+    Returns (rows, counted)."""
+    obs = Observation(counter_name)
+    rows = df.observe(obs, F.count(F.lit(1)).alias(counter_name)).collect()
+    return rows, obs.get[counter_name]

@@ -330,3 +330,17 @@ def test_grouping_sets_family_expands_preaggregate(spark):
         # below it (in the pre-aggregate) but never as Expand input.
         expand_line = next(ln for ln in plan.splitlines() if "Expand [[" in ln)
         assert "l_extendedprice" not in expand_line, f"{name}: {expand_line}"
+
+
+def test_minhash_shares_shingle_sets_by_exchange_reuse(spark):
+    """The band self-join and the verification joins all read one
+    shingle-set relation. Spark plans its exchange once and shares it
+    as a ReusedExchange, so no persisted copy (InMemoryRelation) may
+    stand in for it: a persisted relation outlives the query in the
+    CacheManager and serves later runs. Exchange reuse happens as AQE
+    creates query stages, so read the final plan after a collect."""
+    df = get_query("q_dedup_minhash").fn(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    assert "ReusedExchange" in plan, plan

@@ -210,3 +210,34 @@ def test_engine_leaves_no_conf_trace(spark):
         if before.get(k) != after.get(k)
     }
     assert not changed, changed
+
+
+# Keys that used to persist a relation Spark's exchange reuse already
+# shares; each must now leave the CacheManager as it found it.
+DECACHED_KEYS = (
+    "q_dedup_minhash",
+    "q_merge_dedup",
+    "q_dedup_recall_report",
+    "q_dedup_band_tune",
+    "q_dedup_snapshot_minhash",
+    "q_dedup_simhash",
+    "q_dedup_ngram_jaccard",
+)
+
+
+def test_engine_leaves_no_persisted_relation(spark):
+    """Building and collecting a key, twice, adds no persisted RDD. The
+    cache is cleared first: a relation an earlier test left behind
+    would otherwise match the key's plan and hide a new persist. RDDs
+    are compared by id, not counted: Spark's context cleaner may
+    unpersist an earlier test's garbage-collected RDD meanwhile."""
+    spark.catalog.clearCache()
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    for name in DECACHED_KEYS:
+        for _ in range(2):
+            get_query(name).fn(spark, SF_DIR).collect()
+        assert not persisted() - before, f"{name} left a persisted relation"

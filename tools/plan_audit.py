@@ -7,6 +7,10 @@ Checked per query:
     in the keys that exist to demonstrate that surface;
   * CartesianProduct / BroadcastNestedLoop on non-tiny inputs — only
     allowed where the operator is genuinely non-equi;
+  * engine cache (InMemoryRelation / InMemoryTableScan) — a persisted
+    relation outlives its query in the CacheManager, so it is allowed
+    only where a measurement shows Spark's exchange reuse cannot do
+    the job;
   * exchange count — informational (shuffle budget of the plan).
 
 Exit code is nonzero if an unexpected red flag appears, so this can
@@ -264,6 +268,17 @@ ALLOW_GLOBAL_WINDOW: set[str] = {"q_stats_ks", "q_ml_auc",
                                  "q_ml_average_precision"}
 
 
+# Keys allowed to persist a relation, each with the measurement that
+# shows exchange reuse does not cover it.
+ALLOW_CACHE: set[str] = {
+    # db (per-doc bucket counts) feeds the raw distribution, the target
+    # distribution and the scoring join; even with full exchange reuse
+    # the final aggregate of db runs twice. sf0.1, local[4]: 2.4-3.2 s
+    # with the cache, 4.0-6.6 s without.
+    "q_sample_dsir",
+}
+
+
 def has_global_window(plan: str) -> bool:
     """True if any windowspecdefinition has NO partition columns (its
     first argument is already a sort order, e.g. `sim#42 DESC NULLS
@@ -297,6 +312,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     rows, bad = [], []
     for name, spec in canonical_specs().items():
+        # A relation an earlier key left in the CacheManager would show
+        # up in this key's plan; start every key from an empty cache.
+        spark.catalog.clearCache()
         try:
             df = spec.fn(spark, SF_DIR)
             plan = df._jdf.queryExecution().executedPlan().toString()
@@ -307,6 +325,7 @@ def main() -> int:
         has_pushdown = "PushedFilters: [" in plan and not re.search(r"PushedFilters: \[\]", plan)
         py_udf = "BatchEvalPython" in plan
         nested = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
+        cached = "InMemoryRelation" in plan or "InMemoryTableScan" in plan
         # Un-partitioned window = single-partition sort of its whole
         # input at scale. Allowed only when the input is already bounded
         # by a TakeOrderedAndProject (the limit-then-rank pattern: the
@@ -319,6 +338,8 @@ def main() -> int:
             flags.append("UNEXPECTED nested-loop")
         if global_win and name not in ALLOW_GLOBAL_WINDOW:
             flags.append("UNEXPECTED global-window")
+        if cached and name not in ALLOW_CACHE:
+            flags.append("UNEXPECTED cache")
         if flags and not spec.eval_tier:
             bad.append((name, flags))
         verdict = "; ".join(flags) if flags else "ok"
@@ -333,7 +354,7 @@ def main() -> int:
                 name,
                 str(n_exchange),
                 "y" if has_pushdown else "-",
-                ("py" if py_udf else "") + ("+nl" if nested else ""),
+                ("py" if py_udf else "") + ("+nl" if nested else "") + ("+mem" if cached else ""),
                 verdict,
             )
         )
@@ -343,7 +364,8 @@ def main() -> int:
         f.write("# PLANS — physical-plan audit (tools/plan_audit.py, sf0.001)\n\n")
         f.write("Exchanges = shuffle stages in the plan. pushdown = parquet\n")
         f.write("PushedFilters present. flags: py = Python eval in plan, nl =\n")
-        f.write("nested-loop join (allowed only where the operator demands it).\n\n")
+        f.write("nested-loop join (allowed only where the operator demands it),\n")
+        f.write("mem = persisted relation (allowed only where exchange reuse falls short).\n\n")
         f.write("| key | exchanges | pushdown | flags | verdict |\n|---|---|---|---|---|\n")
         for r in rows:
             f.write("| " + " | ".join(r) + " |\n")
